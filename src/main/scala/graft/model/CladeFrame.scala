@@ -47,7 +47,7 @@ final case class CladeFrame(
   def selectVariables(cols: Seq[String]): CladeFrame = {
     val keep = cols.toSet
     CladeFrame(
-      df.select((idCol +: variables.filter(keep)).map(col): _*),
+      df.select((idCol +: variables.filter(keep)).map(c => col("`" + c.replace("`", "``") + "`")): _*),
       types.view.filterKeys(keep).toMap,
       levels.view.filterKeys(keep).toMap,
       idCol,

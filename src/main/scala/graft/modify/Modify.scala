@@ -1,6 +1,8 @@
 package graft.modify
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.model.{CladeFrame, VariableType}
@@ -10,36 +12,32 @@ import VariableType._
   * is CladeFrame => CladeFrame, mirroring the reference's table-in/table-out
   * contract (reference: clarite/modules/modify.py:5).
   *
-  * Scale design: all data-dependent column decisions (which columns to drop,
-  * outlier bounds, …) are made from ONE wide aggregation pass over the data
-  * (a single job, map-side combinable, no per-column jobs) and the actual
-  * transformation stays lazy/declarative so Catalyst fuses it with
+  * Scale design: data-dependent column decisions (which columns to drop,
+  * outlier bounds, …) come from a number of aggregation passes that does
+  * not grow with the column count: per-column sums and counts share one
+  * flat aggregate, and per-value questions (distinct counts, level sets)
+  * melt the columns to (variable, value) rows and group once, never as N
+  * distinct aggregates, which Catalyst plans as an (N+1)-way Expand. The
+  * transformation itself stays lazy/declarative so Catalyst fuses it with
   * surrounding operators. Nothing here collects row-level data to the
-  * driver — only O(#columns) aggregate summaries.
+  * driver — only per-column summaries.
   */
 object Modify {
 
   // ---------------------------------------------------------------- helpers
 
+  /** Column reference that takes the name literally: variable names may
+    * hold dots, spaces or backticks. */
+  private def colQ(c: String): Column = col("`" + c.replace("`", "``") + "`")
+
   /** Null-on-failure numeric cast (works under both ANSI and legacy cast
     * semantics — pandas to_numeric parity needs invalid -> NULL). */
-  private def tryCastDouble(c: String): Column = expr(s"try_cast(`$c` AS DOUBLE)")
+  private def tryCastDouble(c: String): Column = colQ(c).try_cast(DoubleType)
 
   /** One-pass per-column aggregate summary. `aggs` builds the aggregate
     * columns per variable; returns the single result Row. */
   private def aggRow(df: DataFrame, aggs: Seq[Column]): Row =
     df.agg(aggs.head, aggs.tail: _*).head()
-
-  /** Exact distinct-count of non-null values per column, one pass.
-    * countDistinct is exact — required: type inference at a binary/
-    * categorical boundary must not be approximate. At extreme scale an
-    * approx_count_distinct prefilter can skip clearly-continuous columns,
-    * but the final decision stays exact. */
-  private def distinctCounts(df: DataFrame, cols: Seq[String]): Map[String, Long] = {
-    if (cols.isEmpty) return Map.empty
-    val r = aggRow(df, cols.map(c => countDistinct(col(c)).as(c)))
-    cols.zipWithIndex.map { case (c, i) => c -> r.getLong(i) }.toMap
-  }
 
   // ----------------------------------------------------------- §2.2 columns
 
@@ -238,11 +236,11 @@ object Modify {
   def makeBinary(cf: CladeFrame, skip: Option[Seq[String]] = None,
                  only: Option[Seq[String]] = None): CladeFrame = {
     val cols = cf.resolveSkipOnly(skip, only)
-    val counts = distinctCounts(cf.df, cols)
-    val bad = cols.filter(counts(_) != 2)
+    val profiles = distinctProfiles(cf.df, cols, levelCap = 2)
+    val bad = cols.filter(c => !profiles.get(c).exists(_.nunique == 2))
     require(bad.isEmpty,
       s"cannot make binary (not exactly 2 unique values): ${bad.mkString(", ")}")
-    val lv = levelSets(cf, cols)
+    val lv = cols.map(c => c -> profiles(c).levels.get).toMap
     castToString(cf, cols).withTypes(cols.map(_ -> (Binary: VariableType)).toMap).withLevels(lv)
   }
 
@@ -279,6 +277,85 @@ object Modify {
       .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
   }
 
+  /** One column's summary from [[distinctProfiles]]: the exact
+    * `count(DISTINCT c)`, the non-null values that fail a numeric cast, and
+    * the sorted level strings (as [[levelSets]] lists them) within the cap. */
+  final case class DistinctProfile(nunique: Long, badCast: Long, levels: Option[Seq[String]])
+
+  /** [[DistinctProfile]] of every column in ONE melted pass, linear in the
+    * column count: each non-null cell is stacked once as a
+    * (variable, level, inst, kind, bad) row and grouped by
+    * (variable, level, inst, kind), then by variable, both with map-side
+    * partials.
+    *  - level is the string [[levelSets]] and the re-encoded frame hold;
+    *    inst keeps apart timestamps that print alike (a daylight-saving
+    *    overlap).
+    *  - kind 1/2 marks float -0.0/0.0: two levels, one distinct value.
+    *  - bad flags a failed numeric cast of the typed value (a timestamp is
+    *    numeric). For strings (kind 3) the cast runs once per level,
+    *    weighted by its row count n: a failing string cast throws inside
+    *    Spark and costs microseconds per row.
+    * The level list holds at most levelCap + 1 entries (room for a signed
+    * zero) and is dropped past that: the driver gets O(columns x levelCap)
+    * strings and no buffer holds a column's value set. All-null columns
+    * are absent. */
+  def distinctProfiles(df: DataFrame, cols: Seq[String],
+                       levelCap: Int): Map[String, DistinctProfile] = {
+    if (cols.isEmpty) return Map.empty
+    val cells = cols.flatMap { c =>
+      val v = colQ(c)
+      val dt = df.schema(c).dataType
+      val k = dt match {
+        case FloatType | DoubleType =>
+          when(v === 0, when(v.cast(StringType).startsWith("-"), 1).otherwise(2)).otherwise(0)
+        case StringType => lit(3)
+        case _ => lit(0)
+      }
+      Seq(lit(c), v.cast(StringType),
+        if (dt == TimestampType) unix_micros(v) else lit(0L), k,
+        if (dt == StringType) lit(0L) else (v.isNotNull && tryCastDouble(c).isNull).cast(LongType))
+    }
+    val levels = udaf(new CappedLevels(levelCap + 1), Encoders.STRING)
+    val kind = col("kind")
+    df.select(stack(lit(cols.size) +: cells: _*)
+        .as(Seq("variable", "level", "inst", "kind", "bad")))
+      .filter(col("level").isNotNull)
+      .groupBy("variable", "level", "inst", "kind")
+      .agg(count(lit(1)).as("n"), sum("bad").as("bad"))
+      .groupBy("variable")
+      .agg(count(lit(1)) - count(when(kind === 1, 1)) * count(when(kind === 2, 1)),
+        sum(when(kind === 3 && col("level").try_cast(DoubleType).isNull, col("n"))
+          .otherwise(col("bad"))),
+        sort_array(array_distinct(levels(col("level")))))
+      .collect().map { r =>
+        val n = r.getLong(1)
+        r.getString(0) -> DistinctProfile(n, r.getLong(2),
+          if (n <= levelCap) Some(r.getSeq[String](3)) else None)
+      }.toMap
+  }
+
+  /** A variable's level strings while at most `cap` have arrived; past
+    * that the buffer is emptied and the result is null. */
+  private final class CappedLevels(cap: Int)
+      extends Aggregator[String, (Long, Seq[String]), Seq[String]] {
+    def zero: (Long, Seq[String]) = (0L, Nil)
+    def reduce(b: (Long, Seq[String]), level: String): (Long, Seq[String]) =
+      merge(b, (1L, Seq(level)))
+    def merge(a: (Long, Seq[String]), b: (Long, Seq[String])): (Long, Seq[String]) = {
+      val n = a._1 + b._1
+      (n, if (n <= cap) a._2 ++ b._2 else Nil)
+    }
+    def finish(b: (Long, Seq[String])): Seq[String] = if (b._1 <= cap) b._2 else null
+    def bufferEncoder: Encoder[(Long, Seq[String])] = CappedLevels.bufferEncoder
+    def outputEncoder: Encoder[Seq[String]] = CappedLevels.outputEncoder
+  }
+
+  /** Built once: deriving an encoder runs Scala reflection. */
+  private object CappedLevels {
+    val bufferEncoder: Encoder[(Long, Seq[String])] = Encoders.product
+    val outputEncoder: Encoder[Seq[String]] = ExpressionEncoder()
+  }
+
   /** Result of [[categorize]] with the per-variable decision trail
     * (the reference logs these counts; we surface them as data). */
   final case class CategorizeReport(
@@ -290,36 +367,24 @@ object Modify {
     * 0 uniques → dropped; 1 → constant; 2 → binary;
     * [catMin, catMax] → categorical; >= contMin → continuous if
     * numeric-coercible else unknown; the (catMax, contMin) gap → unknown.
-    * One aggregation pass computes nunique + coercibility for every column.
+    * One [[distinctProfiles]] pass yields nunique, coercibility and the
+    * level sets of the constant/binary/categorical columns.
     */
   def categorize(cf: CladeFrame, catMin: Int = 3, catMax: Int = 6,
                  contMin: Int = 15): CategorizeReport = {
     require(catMin > 2 && catMin <= catMax && contMin > catMax)
     val vars = cf.variables
     if (vars.isEmpty) return CategorizeReport(cf, Nil)
-    val aggs = vars.flatMap { c =>
-      Seq(countDistinct(col(c)).as(s"u_$c"),
-        sum(when(col(c).isNotNull && tryCastDouble(c).isNull, 1L).otherwise(0L)).as(s"b_$c"))
-    }
-    // fanOutSmall (r18, §2.5): N countDistincts plan an (N+1)-way Expand —
-    // every row replicated once per distinct aggregate — and on a
-    // single-row-group input all of it ran in the scan's ONE task
-    // (915 ms of modify_categorize's 1.5 s). The deterministic union
-    // fan-out runs the Expand + distinct-hash work on 1/fanout rows per
-    // branch; countDistinct/sum are partitioning-invariant, so decisions
-    // are identical. (The r17 NEGATIVE result was a repartition-based
-    // spread — the exchange carried every column; this is the exchange-
-    // free xxhash64-filter union measured positive on the Gram scans.)
-    val r = aggRow(graft.stats.Rows.fanOutSmall(cf.df, col(cf.idCol)), aggs)
-    val decisions = vars.zipWithIndex.map { case (c, i) =>
-      val u = r.getLong(2 * i)
-      val badCast = if (r.isNullAt(2 * i + 1)) 0L else r.getLong(2 * i + 1)
+    val profiles = distinctProfiles(cf.df, vars, levelCap = catMax)
+    val decisions = vars.map { c =>
+      val p = profiles.getOrElse(c, DistinctProfile(0L, 0L, None))
+      val u = p.nunique
       val decision: String =
         if (u == 0) "dropped"
         else if (u == 1) Constant.name
         else if (u == 2) Binary.name
         else if (u >= catMin && u <= catMax) Categorical.name
-        else if (u >= contMin && badCast == 0) Continuous.name
+        else if (u >= contMin && p.badCast == 0) Continuous.name
         else Unknown.name
       (c, u, decision)
     }
@@ -331,13 +396,10 @@ object Modify {
       case (c, _, d) if d == Constant.name || d == Binary.name || d == Categorical.name => c
     }
     val contCols = decisions.collect { case (c, _, d) if d == Continuous.name => c }
-    val base = cf.selectVariables(keep)
-    val casted = contCols.foldLeft(castToString(base, catCols.filter(keep.contains)).df) {
-      (d, c) => d.withColumn(c, tryCastDouble(c))
-    }
-    val lv = levelSets(base, catCols)
+    val casted = castToString(cf.selectVariables(keep), catCols).df
+      .withColumns(contCols.map(c => c -> tryCastDouble(c)).toMap)
     CategorizeReport(
-      CladeFrame(casted, newTypes, lv, cf.idCol),
+      CladeFrame(casted, newTypes, catCols.map(c => c -> profiles(c).levels.get).toMap, cf.idCol),
       decisions)
   }
 
@@ -1362,6 +1424,8 @@ object Modify {
     df.select(kept :+ expr(s"stack(${cols.size}, $pairs) AS (variable, value)"): _*)
   }
 
+  /** One projection for all columns: a withColumn per column re-analyzes
+    * the growing plan each time, quadratic in width. */
   private def castToString(cf: CladeFrame, cols: Seq[String]): CladeFrame =
-    cf.copy(df = cols.foldLeft(cf.df)((d, c) => d.withColumn(c, col(c).cast(StringType))))
+    cf.copy(df = cf.df.withColumns(cols.map(c => c -> colQ(c).cast(StringType)).toMap))
 }

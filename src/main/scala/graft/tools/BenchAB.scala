@@ -11,7 +11,9 @@ import org.apache.spark.sql.SparkSession
   * floor that cross-round deltas must clear before they mean anything.
   *
   * Usage: runMain graft.tools.BenchAB [passes] q1 q2 ...
-  * (defaults: 5 passes, the six lines VERDICT r9 flagged as creeping) */
+  * (defaults: 5 passes, the six lines VERDICT r9 flagged as creeping).
+  * Cores and shuffle partitions follow SPARK_GRAFT_CPUS (default 32), as
+  * in graft.Bench. */
 object BenchAB {
   def main(args: Array[String]): Unit = {
     val (passes, names) = args.toSeq match {
@@ -21,9 +23,10 @@ object BenchAB {
       case rest => (5, rest)
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.caseSensitive", "true")
       .config("spark.sql.ansi.enabled", "false")

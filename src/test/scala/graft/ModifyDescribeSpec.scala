@@ -90,6 +90,116 @@ class ModifyDescribeSpec extends SparkSpec {
     assert(rep.frame.typeOf("c_cont") === Continuous)
   }
 
+  /** 40 rows of the value shapes where a string-keyed distinct could drift
+    * from Spark's typed `count(DISTINCT c)`: signed zeros, NaN, timestamps,
+    * all-null, non-numeric strings, ints — under awkward column names. */
+  private def categorizeEdgeFrame: CladeFrame = {
+    import spark.implicits._
+    val rows = (1 to 40).map { i =>
+      val z: java.lang.Double = if (i % 2 == 0) -0.0 else 0.0
+      val zb: java.lang.Double = Seq(-0.0, 0.0, 1.0)(i % 3)
+      val nan: java.lang.Double = i % 4 match {
+        case 0 => Double.NaN; case 1 => 1.0; case 2 => 2.0; case _ => null }
+      (i.toLong, z, zb, nan, null: String,
+        new java.sql.Timestamp(1600000000000L + (i % 20) * 3600000L),
+        s"s${i % 20}", i % 5, i * 0.5, i.toDouble)
+    }
+    CladeFrame(rows.toDF("id", "zeros", "zero_bin", "nan.cat", "all_na",
+      "ts", "str wide", "int's", "dbl", "dbl_dup"))
+  }
+
+  test("categorize parity: signed zeros, NaN, timestamps, all-null, awkward names") {
+    val cf = categorizeEdgeFrame
+    val rep = Modify.categorize(cf)
+    val got = rep.decisions.map { case (v, u, d) => v -> (u, d) }.toMap
+    assert(got === Map(
+      "zeros" -> (1L, "constant"),        // -0.0 and 0.0 are one value
+      "zero_bin" -> (2L, "binary"),
+      "nan.cat" -> (3L, "categorical"),   // NaN is one level, null none
+      "all_na" -> (0L, "dropped"),
+      "ts" -> (20L, "continuous"),        // a timestamp casts to double
+      "str wide" -> (20L, "unknown"),     // wide but not numeric
+      "int's" -> (5L, "categorical"),
+      "dbl" -> (40L, "continuous"),
+      "dbl_dup" -> (40L, "continuous")))
+    val cats = Seq("zeros", "zero_bin", "nan.cat", "int's")
+    assert(rep.frame.levels.keySet === cats.toSet)
+    assert(rep.frame.levels === Modify.levelSets(cf, cats))
+    assert(rep.frame.levels("nan.cat") === Seq("1.0", "2.0", "NaN"))
+    assert(rep.frame.levels("int's") === Seq("0", "1", "2", "3", "4"))
+    assert(rep.frame.typeOf("ts") === Continuous && rep.frame.typeOf("str wide") === Unknown)
+    assert(!rep.frame.variables.contains("all_na"))
+    // the rewritten frame still reads: cast columns keep their values
+    val first = rep.frame.df.orderBy("id").head()
+    assert(first.getAs[String]("int's") === "1" && first.getAs[Double]("dbl") === 0.5)
+    // two instants that print alike in a daylight-saving overlap stay two
+    // distinct values, as in count(DISTINCT ts), under one level string
+    import spark.implicits._
+    val overlap = Seq(1636263000000L, 1636266600000L) // 01:30 EDT, 01:30 EST
+      .map(ms => new java.sql.Timestamp(ms)).toDF("ts")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try {
+      assert(Modify.distinctProfiles(overlap, Seq("ts"), levelCap = 6)("ts") ===
+        Modify.DistinctProfile(2L, 0L, Some(Seq("2021-11-07 01:30:00"))))
+    } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
+  }
+
+  test("categorize: a 1,000-level column gets no level list; makeBinary reuses the pass") {
+    import spark.implicits._
+    val df = (1 to 2000).map(i => (i.toLong, i % 1000, if (i % 3 == 0) "y" else "n"))
+      .toDF("id", "wide", "yn")
+    val rep = Modify.categorize(CladeFrame(df))
+    assert(rep.decisions.map(d => d._1 -> d._2).toMap === Map("wide" -> 1000L, "yn" -> 2L))
+    assert(!rep.frame.levels.contains("wide") && rep.frame.levels("yn") === Seq("n", "y"))
+    val p = Modify.distinctProfiles(df, Seq("wide", "yn"), levelCap = 6)
+    assert(p("wide") === Modify.DistinctProfile(1000L, 0L, None))
+    assert(p("yn") === Modify.DistinctProfile(2L, 2000L, Some(Seq("n", "y"))))
+    val bin = Modify.makeBinary(categorizeEdgeFrame, only = Some(Seq("zero_bin")))
+    assert(bin.typeOf("zero_bin") === Binary)
+    assert(bin.levels("zero_bin") === Seq("-0.0", "0.0", "1.0"))
+    val e = intercept[IllegalArgumentException] {
+      Modify.makeBinary(CladeFrame(df), only = Some(Seq("wide", "yn")))
+    }
+    assert(e.getMessage ===
+      "requirement failed: cannot make binary (not exactly 2 unique values): wide")
+  }
+
+  test("categorize: job count independent of width, no Expand in any plan") {
+    def run(k: Int): (Int, Seq[String]) = {
+      val wide = spark.range(0, 3000).select(col("id") +:
+        (0 until k).map(i => ((col("id") * (i + 1)) % (3 + i % 40)).as(s"c$i")): _*)
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val jl = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet(); ()
+        }
+      }
+      val ql = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                               d: Long): Unit = { plans.add(qe.executedPlan.toString); () }
+        override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                               e: Exception): Unit = ()
+      }
+      spark.sparkContext.addSparkListener(jl)
+      spark.listenerManager.register(ql)
+      try {
+        Modify.categorize(CladeFrame(wide))
+        Thread.sleep(500) // both listener buses are async
+      } finally {
+        spark.sparkContext.removeSparkListener(jl)
+        spark.listenerManager.unregister(ql)
+      }
+      (jobs.get(), plans.toArray(Array.empty[String]).toSeq)
+    }
+    val (jobs10, plans10) = run(10)
+    val (jobs60, plans60) = run(60)
+    assert(jobs10 === jobs60, s"10 columns: $jobs10 jobs, 60 columns: $jobs60")
+    assert(plans10.nonEmpty && plans60.nonEmpty)
+    val expand = (plans10 ++ plans60).find(_.contains("Expand"))
+    assert(expand.isEmpty, s"categorize planned an Expand:\n${expand.map(_.take(2000))}")
+  }
+
   test("recodeValues replaces values only in selected columns and keeps levels in sync") {
     var cf = Modify.makeCategorical(sample, only = Some(Seq("cat")))
     val out = Modify.recodeValues(cf, Map("a" -> "A"), only = Some(Seq("cat")))
